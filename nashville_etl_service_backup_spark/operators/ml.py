@@ -119,13 +119,19 @@ def _sql_double(x: float) -> str:
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
+def _ident(c: str) -> str:
+    """Backtick-quote a column name for generated SQL; an embedded
+    backtick is doubled, so any name parses back to itself."""
+    return "`" + c.replace("`", "``") + "`"
+
+
 def _margin_sql(feature_cols: list[str], weights: list[float]) -> str:
     """Textual twin of _margin(): same left-associated + chain, same
     ROUND — the SQL parser builds the identical expression tree."""
     terms = " + ".join(
         [_sql_double(weights[0])]
         + [
-            f"{_sql_double(weights[j + 1])} * `{c}`"
+            f"{_sql_double(weights[j + 1])} * {_ident(c)}"
             for j, c in enumerate(feature_cols)
         ]
     )
@@ -264,11 +270,9 @@ def logreg_train(
                 # (fast depth-1 vs Column lazy chains).
                 resid = (
                     f"({_sigmoid_sql(_margin_sql(feature_cols, w))}"
-                    f" - `{label_col}`) AS _r"
+                    f" - {_ident(label_col)}) AS _r"
                 )
-                proj = feats.selectExpr(
-                    *[f"`{c}`" for c in feature_cols], resid
-                )
+                proj = feats.selectExpr(*map(_ident, feature_cols), resid)
                 aggs = ["COUNT(1) AS n"]
                 aggs.append(
                     f"SUM(CAST(ROUND(_r, {GRAD_SCALE})"
@@ -276,7 +280,7 @@ def logreg_train(
                 )
                 for j, c in enumerate(feature_cols):
                     aggs.append(
-                        f"SUM(CAST(ROUND(_r * `{c}`, {GRAD_SCALE})"
+                        f"SUM(CAST(ROUND(_r * {_ident(c)}, {GRAD_SCALE})"
                         f" AS DECIMAL(38,12))) AS g{j + 1}"
                     )
                 upd = [
@@ -396,7 +400,7 @@ def logreg_train_folds(
     Returns (k weight vectors, k train-row counts).
     Caller should persist `folds`."""
     d = len(feature_cols)
-    fold = F.col(fold_col)
+    fold = F.col(_ident(fold_col))
     reserved = {"_fold_g"}
     for i in range(k):
         reserved.add(f"_r{i}")
@@ -432,12 +436,12 @@ def logreg_train_folds(
                 # against the Column lazy chains).
                 resids = [
                     f"({_sigmoid_sql(_margin_sql(feature_cols, ws[i]))}"
-                    f" - `{label_col}`) AS _r{i}"
+                    f" - {_ident(label_col)}) AS _r{i}"
                     for i in range(k)
                 ]
                 proj = folds.selectExpr(
-                    f"`{fold_col}` AS _fold_g",
-                    *[f"`{c}`" for c in feature_cols],
+                    f"{_ident(fold_col)} AS _fold_g",
+                    *map(_ident, feature_cols),
                     *resids,
                 )
                 aggs = []
@@ -455,7 +459,7 @@ def logreg_train_folds(
                     for j, c in enumerate(feature_cols):
                         aggs.append(
                             f"SUM(CAST(CASE WHEN {guard} THEN"
-                            f" ROUND(_r{i} * `{c}`, {GRAD_SCALE}) END"
+                            f" ROUND(_r{i} * {_ident(c)}, {GRAD_SCALE}) END"
                             f" AS DECIMAL(38,12))) AS g{i}_{j + 1}"
                         )
                 upd = [

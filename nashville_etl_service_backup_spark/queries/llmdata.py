@@ -250,10 +250,10 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="ivf_inc_")
     src, idx, ckpt = f"{work}/src", f"{work}/index", f"{work}/ckpt"
     corpus.repartition(4).write.parquet(src)
-    q = incremental_ivf(spark, src, idx, ckpt, cents, commit_log=True)
+    q = incremental_ivf(spark, src, idx, ckpt, cents)
     q.awaitTermination(300)
     q.stop()
-    index = read_ivf_index(spark, idx, commit_log=True)
+    index = read_ivf_index(spark, idx)
     return ivf_probe_topk(index, cents, query, k=10, n_probe=2)
 
 
@@ -4656,14 +4656,14 @@ def text_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # division is exact for any realistic n, floor matches the oracle)
     k = (F.lit(9) * (F.col("n_cal") + 1) + F.lit(9)) / 10
     cum = cum.withColumn("k", F.floor(k).cast("long"))
-    # n_cal/k are constant across rows, so min() reads them exactly
-    qhat = (
-        cum.filter(F.col("cum") >= F.col("k"))
-        .agg(
-            F.min("s").alias("qhat"),
-            F.min("n_cal").alias("n_cal"),
-            F.min("k").alias("k"),
-        )
+    # n_cal/k are constant across rows, so min() reads them exactly;
+    # the cum >= k test rides inside qhat's aggregate, not a filter, so
+    # a calibration fold under 9 rows (k > n_cal: no k-th score) still
+    # reports n_cal and k, with a NULL qhat
+    qhat = cum.agg(
+        F.min(F.when(F.col("cum") >= F.col("k"), F.col("s"))).alias("qhat"),
+        F.min("n_cal").alias("n_cal"),
+        F.min("k").alias("k"),
     )
     test = feats.filter(F.col("_b") == 0).select(
         F.col("y").cast("int").alias("label"),

@@ -2,18 +2,17 @@
 file-based continuous aggregates.
 
 The reference's loader gets atomicity for free from Postgres
-transactions (transform_data.py's INSERT batches — SURVEY §2.2 K2);
-the Spark-side incremental rollup/CMS/HLL partials (streaming/
-pipeline.py) instead live as plain ``batch_id=<id>/`` parquet
-directories, which leaves three documented gaps: a reader can observe
-a partial directory while it is being (over)written, a crash can leave
-a torn directory that readers then merge, and compaction's
-multi-directory swap is not atomic (its docstring says "use a
-transactional table format"). This module is that table format, pared
-to exactly what the partials need — the Delta/Iceberg core idea
-(an append-only log of manifests; the current snapshot is the fold of
-the log; data files are immutable and invisible until a manifest
-names them) without the format's schema/stats machinery:
+transactions (transform_data.py's INSERT batches — SURVEY §2.2 K2).
+The Spark-side incremental partials (streaming/pipeline.py,
+streaming/ivf.py) are ``batch_id=<id>/`` parquet directories; listed
+bare, a reader could observe a directory mid-(over)write, merge a
+torn directory a crash left behind, and see a multi-directory
+compaction swap half done. This module is the table format that
+closes those gaps, pared to exactly what the partials need — the
+Delta/Iceberg core idea (an append-only log of manifests; the current
+snapshot is the fold of the log; data files are immutable and
+invisible until a manifest names them) without the format's
+schema/stats machinery:
 
     table_root/
       batch_id=0/  batch_id=1/ ...     (parquet dirs, written first)
@@ -23,8 +22,8 @@ names them) without the format's schema/stats machinery:
         00000002.json   {"add": ["batch_id=-1"],
                          "remove": ["batch_id=0", "batch_id=1"]}
 
-- WRITE protocol: write the data directory fully, then `commit(root,
-  add=[dir])`. A crash between the two leaves an orphan directory that
+- WRITE protocol (`publish`): write the data directory fully, then
+  `commit(root, add=[dir])`. A crash between the two leaves an orphan directory that
   no reader ever merges (vacuum sweeps it later).
 - COMMIT protocol (optimistic, multi-writer-safe on a POSIX fs): the
   manifest body is written to a hidden temp file, fsynced, then
@@ -50,10 +49,13 @@ names them) without the format's schema/stats machinery:
   swap shape) — never via a bare replayed add.
 - COMPACTION: write the folded directory, then ONE manifest
   {add: [compacted], remove: [inputs]} — the reader-visible swap is a
-  single atomic link, so compaction may now run concurrently with
-  readers (the restriction compact_rollup documents is lifted in
-  compact_rollup_committed). Removed/orphan directories are deleted by
+  single atomic link, so compaction may run concurrently with readers
+  (pipeline.compact_rollup). Removed/orphan directories are deleted by
   `vacuum`, which never touches live ones.
+- MIGRATION: a store written before the log existed holds bare
+  ``batch_id=`` directories and no ``_commits/``. Readers refuse it
+  with a FileNotFoundError naming `adopt_plain_layout`, which commits
+  those directories in one manifest, once.
 
 Scale notes: manifests are O(changed directories) — bytes, not data;
 the fold is a driver-side listing of one small directory (Delta does
@@ -69,6 +71,7 @@ import os
 
 
 _COMMITS = "_commits"
+_BATCH = "batch_id="
 
 
 def _commits_dir(root: str) -> str:
@@ -113,12 +116,6 @@ def snapshot(root: str, as_of: int | None = None) -> list[str]:
         live.difference_update(manifest.get("remove", ()))
         live.update(manifest.get("add", ()))
     return sorted(live)
-
-
-def snapshot_paths(root: str, as_of: int | None = None) -> list[str]:
-    """Absolute paths of the live directories (reader input)."""
-    r = root.rstrip("/")
-    return [f"{r}/{d}" for d in snapshot(root, as_of=as_of)]
 
 
 def ever_added(root: str) -> set[str]:
@@ -177,15 +174,76 @@ def commit(root: str, add: list[str] | None = None,
             os.unlink(tmp)
 
 
-def read_committed(spark, root: str, as_of: int | None = None):
-    """Reader-side helper shared by the rollup/CMS/HLL sinks: a
-    DataFrame over exactly the live directories (snapshot isolation),
-    erroring — not cold-starting — when nothing is committed.
-    ``as_of`` time-travels to the state after manifest ``as_of``."""
-    paths = snapshot_paths(root, as_of=as_of)
-    if not paths:
+def plain_dirs(root: str) -> list[str]:
+    """Every ``batch_id=`` data directory under ``root``, committed or
+    not — what a bare list-the-directory reader would merge."""
+    r = root.rstrip("/")
+    if not os.path.isdir(r):
+        return []
+    return sorted(
+        e
+        for e in os.listdir(r)
+        if e.startswith(_BATCH) and os.path.isdir(os.path.join(r, e))
+    )
+
+
+def _require_adopted(root: str, own: str | None = None) -> None:
+    """Refuse a store in the pre-log plain layout: ``batch_id=``
+    directories (other than ``own``, the caller's own in-flight batch)
+    but no ``_commits/`` log."""
+    if os.path.isdir(_commits_dir(root)):
+        return
+    if any(d != own for d in plain_dirs(root)):
+        raise FileNotFoundError(
+            f"{root} holds batch_id= directories but no {_COMMITS}/ log "
+            f"— a store written in the old plain layout (or whose first "
+            f"batch never committed). Migrate it once with "
+            f"commitlog.adopt_plain_layout({root!r})."
+        )
+
+
+def adopt_plain_layout(root: str) -> int | None:
+    """One-shot migration of a store written before the commit log:
+    commit, in ONE manifest, exactly the ``batch_id=`` directories the
+    plain reader used to merge. Returns the manifest index, or None
+    when there is nothing new to adopt — so a second call writes no
+    manifest (`commit` skips adds that were ever added before). Run it
+    with the store's writers stopped: a directory written but not yet
+    committed would be adopted with the rest."""
+    return commit(root, add=plain_dirs(root))
+
+
+def committed_snapshot(root: str, as_of: int | None = None) -> list[str]:
+    """`snapshot`, erroring — not cold-starting — when nothing is
+    committed; the error names `adopt_plain_layout` when the root is
+    an unmigrated plain-layout store."""
+    live = snapshot(root, as_of=as_of)
+    if not live:
+        _require_adopted(root)
         raise FileNotFoundError(f"no committed partials under {root}")
+    return live
+
+
+def read_committed(spark, root: str, as_of: int | None = None):
+    """Reader-side helper shared by every partial sink: a DataFrame
+    over exactly the live directories (snapshot isolation).
+    ``as_of`` time-travels to the state after manifest ``as_of``."""
+    r = root.rstrip("/")
+    paths = [f"{r}/{d}" for d in committed_snapshot(root, as_of=as_of)]
     return spark.read.option("basePath", root).parquet(*paths)
+
+
+def publish(part, root: str, batch_id: int) -> None:
+    """Writer-side helper shared by every partial sink (the WRITE
+    protocol): overwrite the batch's own ``batch_id=<id>/`` directory —
+    a replay rewrites the same content — then make it reader-visible
+    with one manifest append (a no-op on replay). Refuses an
+    unmigrated plain-layout store, whose directories a fresh log would
+    silently hide."""
+    name = f"{_BATCH}{batch_id}"
+    _require_adopted(root, own=name)
+    part.write.mode("overwrite").parquet(f"{root.rstrip('/')}/{name}")
+    commit(root, add=[name])
 
 
 def vacuum(root: str, only: list[str] | None = None) -> list[str]:

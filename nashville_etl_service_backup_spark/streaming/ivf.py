@@ -11,9 +11,9 @@ its vectors with the same Arrow kernel the batch path uses
 IEEE cosine), and the per-batch posting partial lands under
 ``index_path/batch_id=<id>/`` with the incremental_rollup replay
 contract: a re-delivered batch overwrites its OWN directory, so the
-index can never double-post, and with ``commit_log=True`` the partial
-becomes reader-visible only through an atomic manifest append
-(streaming/commitlog.py) — torn partials never serve.
+index can never double-post, and the partial becomes reader-visible
+only through an atomic manifest append (streaming/commitlog.py) — torn
+partials never serve.
 
 Because the quantizer is frozen, the maintained index is EXACTLY the
 index a batch rebuild would produce on the union of the batches —
@@ -31,7 +31,7 @@ so queries touch ~n_probe/k of the corpus regardless of how many
 batches built it. Drift is handled by re-fitting OFFLINE on a sample
 and atomically swapping index roots — the quantizer is a few KB, the
 index rebuild is one assignment pass, and the commit log makes the
-swap a single manifest append (compact_rollup_committed's device).
+swap a single manifest append (compact_rollup's device).
 
 Reference parity: the reference has no vector serving at all; this is
 part of the 100-TB-training-pipeline extension surface (SURVEY §6).
@@ -49,6 +49,7 @@ from nashville_etl_service_backup_spark.operators.similarity import (
     cosine,
     nearest_centroid_vectorized,
 )
+from nashville_etl_service_backup_spark.streaming import commitlog
 
 
 def incremental_ivf(
@@ -60,15 +61,14 @@ def incremental_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     extra_cols: tuple[str, ...] = ("label",),
-    commit_log: bool = True,
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Stream embedding batches into an IVF posting store against a
     FROZEN quantizer. Each micro-batch: assign every vector to its
     highest-cosine centroid (Arrow kernel, bit-identical to the batch
     path), write (id, extra..., v, cent_id) to its own
-    ``batch_id=<id>/`` directory (overwrite → idempotent replay),
-    optionally commit through the manifest log.
+    ``batch_id=<id>/`` directory (overwrite → idempotent replay), then
+    commit it through the manifest log.
 
     The source batches must partition the corpus (file-based
     AvailableNow delivery does this by construction); a vector
@@ -77,7 +77,6 @@ def incremental_ivf(
     schema = spark.read.parquet(emb_path).schema
     art = centroid_artifact(centroids)
     assign = nearest_centroid_vectorized(*art)
-    root = index_path.rstrip("/")
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         part = (
@@ -94,13 +93,7 @@ def incremental_ivf(
                 F.col("_a")["cid"].alias("cent_id"),
             )
         )
-        part.write.mode("overwrite").parquet(f"{root}/batch_id={batch_id}")
-        if commit_log:
-            from nashville_etl_service_backup_spark.streaming import (
-                commitlog,
-            )
-
-            commitlog.commit(index_path, add=[f"batch_id={batch_id}"])
+        commitlog.publish(part, index_path, batch_id)
 
     return (
         spark.readStream.schema(schema)
@@ -113,18 +106,11 @@ def incremental_ivf(
     )
 
 
-def read_ivf_index(
-    spark: SparkSession, index_path: str, commit_log: bool = True
-) -> DataFrame:
-    """The served posting table: union of the per-batch partials.
-    ``commit_log=True`` merges only manifest-committed partials (the
-    read_rollup contract — torn/uncommitted directories are
-    invisible)."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        return commitlog.read_committed(spark, index_path)
-    return spark.read.option("basePath", index_path).parquet(index_path)
+def read_ivf_index(spark: SparkSession, index_path: str) -> DataFrame:
+    """The served posting table: union of the manifest-committed
+    per-batch partials (the read_rollup contract — torn/uncommitted
+    directories are invisible)."""
+    return commitlog.read_committed(spark, index_path)
 
 
 def ivf_probe_topk(

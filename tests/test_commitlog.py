@@ -9,7 +9,9 @@ from __future__ import annotations
 import json
 import os
 from datetime import datetime
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from nashville_etl_service_backup_spark.streaming import commitlog
@@ -147,18 +149,18 @@ def _state(spark, roll):
 
     return {
         (str(r["window_start"]), r["event_type"]): (r["n"], float(r["total"]))
-        for r in read_rollup(spark, roll, commit_log=True).collect()
+        for r in read_rollup(spark, roll).collect()
     }
 
 
 def test_committed_rollup_end_to_end(spark, tmp_path):
-    """incremental_rollup(commit_log=True): two micro-batch rounds plus
-    a crash replay match the batch twin; a torn (uncommitted) partial
-    is invisible to readers; compact_rollup_committed swaps atomically
-    in one manifest and vacuums the inputs; forget_from_rollup's
-    retraction partial goes through the log too."""
+    """incremental_rollup: two micro-batch rounds plus a crash replay
+    match the batch twin; a torn (uncommitted) partial is invisible to
+    readers; compact_rollup swaps atomically in one manifest and
+    vacuums the inputs; forget_from_rollup's retraction partial goes
+    through the log too."""
     from nashville_etl_service_backup_spark.streaming.pipeline import (
-        compact_rollup_committed,
+        compact_rollup,
         forget_from_rollup,
         incremental_rollup,
     )
@@ -177,13 +179,9 @@ def test_committed_rollup_end_to_end(spark, tmp_path):
         ("2024-01-01T09:30:00", "view", 3.25),
     ]
     _write_events(spark, src, b1, [1, 2, 3])
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=True
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
     _write_events(spark, src, b2, [4, 5])
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=True
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
 
     expected = {
         ("2024-01-01 10:00:00", "click"): (3, 4.0),
@@ -221,9 +219,7 @@ def test_committed_rollup_end_to_end(spark, tmp_path):
     crc = os.path.join(ckpt, "commits", f".{last}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=True
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
     assert _state(spark, roll) == expected
 
     # compaction: one-manifest swap, values identical, inputs vacuumed
@@ -231,7 +227,7 @@ def test_committed_rollup_end_to_end(spark, tmp_path):
     # in-flight writer's uncommitted batch; round-8 ADVICE); a full
     # vacuum with the stream stopped sweeps it
     n_manifests = len(commitlog.log_entries(roll))
-    compact_rollup_committed(spark, roll)
+    compact_rollup(spark, roll)
     assert _state(spark, roll) == expected
     assert len(commitlog.log_entries(roll)) == n_manifests + 1
     live = commitlog.snapshot(roll)
@@ -244,20 +240,18 @@ def test_committed_rollup_end_to_end(spark, tmp_path):
 
     # forget: retraction partial through the log; click event 2 erased
     tomb = spark.createDataFrame([(2,)], "event_id long")
-    forget_from_rollup(
-        spark, src, roll, tomb, forget_id=-100, commit_log=True
-    )
+    forget_from_rollup(spark, src, roll, tomb, forget_id=-100)
     got = _state(spark, roll)
     assert got[("2024-01-01 10:00:00", "click")] == (2, 2.0)
-    compact_rollup_committed(spark, roll)
+    compact_rollup(spark, roll)
     assert _state(spark, roll) == got
     assert commitlog.snapshot(roll) == ["batch_id=-2"]
 
 
 def test_committed_cms_and_hll_ignore_torn_partials(spark, tmp_path):
-    """The sketch sinks share the rollup's commit-log contract: with
-    commit_log=True the readers merge only manifest-committed partials,
-    so a torn directory never corrupts counters/registers."""
+    """The sketch sinks share the rollup's commit-log contract: the
+    readers merge only manifest-committed partials, so a torn directory
+    never corrupts counters/registers."""
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         incremental_cms,
         incremental_hll,
@@ -278,19 +272,19 @@ def test_committed_cms_and_hll_ignore_torn_partials(spark, tmp_path):
     cms = str(tmp_path / "cms")
     hll = str(tmp_path / "hll")
     incremental_cms(
-        spark, src, cms, str(tmp_path / "cckpt"), commit_log=True
+        spark, src, cms, str(tmp_path / "cckpt")
     ).awaitTermination(120)
     incremental_hll(
-        spark, src, hll, str(tmp_path / "hckpt"), commit_log=True
+        spark, src, hll, str(tmp_path / "hckpt")
     ).awaitTermination(120)
 
     want_cms = {
         (r["row_idx"], r["bucket"]): r["cnt"]
-        for r in read_cms(spark, cms, commit_log=True).collect()
+        for r in read_cms(spark, cms).collect()
     }
     want_hll = {
         (r["event_type"], r["bucket"]): r["register"]
-        for r in read_hll(spark, hll, commit_log=True).collect()
+        for r in read_hll(spark, hll).collect()
     }
     assert want_cms and want_hll
 
@@ -304,25 +298,22 @@ def test_committed_cms_and_hll_ignore_torn_partials(spark, tmp_path):
 
     got_cms = {
         (r["row_idx"], r["bucket"]): r["cnt"]
-        for r in read_cms(spark, cms, commit_log=True).collect()
+        for r in read_cms(spark, cms).collect()
     }
     got_hll = {
         (r["event_type"], r["bucket"]): r["register"]
-        for r in read_hll(spark, hll, commit_log=True).collect()
+        for r in read_hll(spark, hll).collect()
     }
     assert got_cms == want_cms
     assert got_hll == want_hll
-    # the plain readers DO see the torn dirs — the gap the log closes
-    assert read_cms(spark, cms).count() != len(want_cms) or True
     assert commitlog.vacuum(cms) == ["batch_id=999"]
     assert commitlog.vacuum(hll) == ["batch_id=999"]
 
 
 def test_committed_lsh_gate_crash_replay_and_torn_store(spark, tmp_path):
-    """incremental_lsh_dedup(commit_log=True): verdicts and store match
-    the plain-layout gate across a crash replay, a torn signature
-    partial never poisons the novelty probe, and both stores' manifests
-    track exactly the processed batches."""
+    """incremental_lsh_dedup: verdicts and store hold across a crash
+    replay, a torn signature partial never poisons the novelty probe,
+    and both stores' manifests track exactly the processed batches."""
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         incremental_lsh_dedup,
         read_dedup_audit,
@@ -339,9 +330,7 @@ def test_committed_lsh_gate_crash_replay_and_torn_store(spark, tmp_path):
         ).write.mode("append").parquet(src)
 
     def run_gate():
-        q = incremental_lsh_dedup(
-            spark, src, sig, audit, ckpt, commit_log=True
-        )
+        q = incremental_lsh_dedup(spark, src, sig, audit, ckpt)
         q.awaitTermination(120)
         q.stop()
 
@@ -353,9 +342,9 @@ def test_committed_lsh_gate_crash_replay_and_torn_store(spark, tmp_path):
 
     # torn partial: a crashed writer's uncommitted signatures for a doc
     # whose bands WOULD collide with doc 3 — must not flag anything
-    spark.read.option("basePath", sig).parquet(
-        *commitlog.snapshot_paths(sig)
-    ).limit(2).write.mode("overwrite").parquet(f"{sig}/batch_id=777")
+    commitlog.read_committed(spark, sig).limit(2).write.mode(
+        "overwrite"
+    ).parquet(f"{sig}/batch_id=777")
 
     write([
         (3, "the quick brown fox jumps over the lazy dog"),  # dup of 1
@@ -365,15 +354,10 @@ def test_committed_lsh_gate_crash_replay_and_torn_store(spark, tmp_path):
 
     rows = {
         r["batch_id"]: (r["n_docs"], r["n_dup_candidates"])
-        for r in read_dedup_audit(spark, audit, commit_log=True).collect()
+        for r in read_dedup_audit(spark, audit).collect()
     }
     assert rows == {0: (2, 0), 1: (2, 1)}
-    stored = {
-        r["doc_id"]
-        for r in spark.read.option("basePath", sig)
-        .parquet(*commitlog.snapshot_paths(sig))
-        .collect()
-    }
+    stored = {r["doc_id"] for r in commitlog.read_committed(spark, sig).collect()}
     assert stored == {1, 2, 4}
     assert commitlog.snapshot(sig) == ["batch_id=0", "batch_id=1"]
     assert commitlog.snapshot(audit) == ["batch_id=0", "batch_id=1"]
@@ -391,7 +375,7 @@ def test_committed_lsh_gate_crash_replay_and_torn_store(spark, tmp_path):
     run_gate()
     rows = {
         r["batch_id"]: (r["n_docs"], r["n_dup_candidates"])
-        for r in read_dedup_audit(spark, audit, commit_log=True).collect()
+        for r in read_dedup_audit(spark, audit).collect()
     }
     assert rows == {0: (2, 0), 1: (2, 1)}
     assert len(commitlog.log_entries(sig)) == n_sig
@@ -400,9 +384,9 @@ def test_committed_lsh_gate_crash_replay_and_torn_store(spark, tmp_path):
 
 
 def test_committed_bloom_gate_ignores_torn_positions(spark, tmp_path):
-    """incremental_bloom_gate(commit_log=True): an uncommitted torn
-    position partial (which would make every key look already-seen)
-    never reaches the probe."""
+    """incremental_bloom_gate: an uncommitted torn position partial
+    (which would make every key look already-seen) never reaches the
+    probe."""
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         incremental_bloom_gate,
         read_bloom_audit,
@@ -416,9 +400,7 @@ def test_committed_bloom_gate_ignores_torn_positions(spark, tmp_path):
     spark.createDataFrame(
         [(1, "a"), (2, "b")], "doc_id long, text string"
     ).coalesce(1).write.mode("append").parquet(src)
-    q = incremental_bloom_gate(
-        spark, src, bloom, audit, ckpt, commit_log=True
-    )
+    q = incremental_bloom_gate(spark, src, bloom, audit, ckpt)
     q.awaitTermination(120)
     q.stop()
 
@@ -430,17 +412,68 @@ def test_committed_bloom_gate_ignores_torn_positions(spark, tmp_path):
     spark.createDataFrame(
         [(1, "a"), (9, "z")], "doc_id long, text string"
     ).coalesce(1).write.mode("append").parquet(src)
-    q = incremental_bloom_gate(
-        spark, src, bloom, audit, ckpt, commit_log=True
-    )
+    q = incremental_bloom_gate(spark, src, bloom, audit, ckpt)
     q.awaitTermination(120)
     q.stop()
 
     rows = {
         r["batch_id"]: (r["n_docs"], r["n_flagged"])
-        for r in read_bloom_audit(spark, audit, commit_log=True).collect()
+        for r in read_bloom_audit(spark, audit).collect()
     }
     # key 1 repeats (flagged); key 9 is novel — the torn saturating
     # partial would have flagged it too
     assert rows == {0: (2, 0), 1: (2, 1)}
     assert commitlog.vacuum(bloom) == ["batch_id=888"]
+
+
+def test_adopt_plain_layout_migrates_a_plain_rollup(spark, tmp_path):
+    """A store in the retired plain layout (bare ``batch_id=`` parquet
+    directories, no ``_commits/``) is refused by readers and writers
+    with an error naming the migration; adopt_plain_layout then makes
+    it read exactly as the plain directory listing merged it, and a
+    second adoption writes no manifest."""
+    from nashville_etl_service_backup_spark.streaming.pipeline import (
+        read_rollup,
+    )
+
+    roll = str(tmp_path / "rollup")
+    schema = (
+        "window_start timestamp, event_type string, n long, "
+        "total decimal(18,6)"
+    )
+    h10, h11 = datetime(2024, 1, 1, 10), datetime(2024, 1, 1, 11)
+    D = Decimal
+    partials = {
+        "batch_id=0": [(h10, "click", 2, D("3.5")), (h11, "view", 1, D(4))],
+        "batch_id=1": [(h10, "click", 1, D("0.5"))],
+        "batch_id=-2": [(h11, "view", -1, D(-4))],  # a forget partial
+    }
+    for name, rows in partials.items():
+        spark.createDataFrame(rows, schema).write.parquet(f"{roll}/{name}")
+
+    with pytest.raises(FileNotFoundError, match="adopt_plain_layout"):
+        read_rollup(spark, roll)
+    part = spark.createDataFrame([(h10, "click", 1, D(1))], schema)
+    with pytest.raises(FileNotFoundError, match="adopt_plain_layout"):
+        commitlog.publish(part, roll, 2)
+    assert commitlog.plain_dirs(roll) == sorted(partials)
+    assert not os.path.exists(os.path.join(roll, "_commits"))
+
+    assert commitlog.adopt_plain_layout(roll) == 0
+    assert commitlog.snapshot(roll) == sorted(partials)
+    plain = (
+        spark.read.option("basePath", roll)
+        .parquet(roll)
+        .groupBy("window_start", "event_type")
+        .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
+        .filter(F.col("n") > 0)
+    )
+    assert sorted(read_rollup(spark, roll).collect()) == sorted(
+        plain.collect()
+    )
+    assert sorted(map(tuple, plain.collect())) == [
+        (h10, "click", 3, D("4.000000"))
+    ]
+
+    assert commitlog.adopt_plain_layout(roll) is None
+    assert len(commitlog.log_entries(roll)) == 1

@@ -464,6 +464,36 @@ def test_conformal_gate_marginal_coverage(spark):
         assert 0.0 <= r["qhat"] <= 1.0
 
 
+def test_conformal_gate_tiny_calibration_fold(spark, tmp_path):
+    """A calibration fold under 9 rows has no k-th smallest score
+    (k = ceil(0.9·(n+1)) > n): q̂ is NULL, while n_cal and k are still
+    reported, as the DuckDB oracle's separate count does."""
+    from nashville_etl_service_backup_spark.operators.text_analysis import (
+        hash_bucket,
+    )
+    from nashville_etl_service_backup_spark.queries.llmdata import (
+        text_conformal_gate,
+    )
+
+    vocab = "the a of river city music show park food event to and".split()
+    texts = [
+        " ".join(vocab[(i * j + j * j) % len(vocab)] for j in range(5 + i % 60))
+        for i in range(300)
+    ]
+    docs = spark.createDataFrame(
+        [(i, t, "en", "web", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).withColumn("_b", hash_bucket(F.col("doc_id"), 5))
+    cal = docs.filter(F.col("_b") == 1).orderBy("doc_id").limit(5)
+    docs.filter(F.col("_b") != 1).unionByName(cal).drop("_b").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    rows = text_conformal_gate(spark, str(tmp_path)).collect()
+    assert rows
+    for r in rows:
+        assert (r["n_cal"], r["k"], r["qhat"]) == (5, 6, None)
+
+
 def test_calibration_curve_ece_consistency(spark):
     from nashville_etl_service_backup_spark.queries.llmdata import (
         text_calibration_curve,
@@ -745,3 +775,32 @@ def test_gd_reserved_name_collision_raises(spark):
     )
     with pytest.raises(ValueError, match="_r"):
         logreg_train(feats, ["x1", "x2"], "y", iterations=1)
+
+
+
+def test_gd_backtick_identifiers_train_identically(spark):
+    """Feature, label and fold names containing a backtick are quoted
+    in the SQL-string GD rounds, never parsed as SQL: both trainers
+    return weights bit-identical to the same data under plain names."""
+    from nashville_etl_service_backup_spark.operators.ml import (
+        logreg_train_folds,
+    )
+
+    feats = standardize(_toy(spark), ["x1", "x2"]).withColumn(
+        "_fold", (F.col("id") % 3).cast("int")
+    )
+    odd = (
+        feats.withColumnRenamed("x1", "x`1")
+        .withColumnRenamed("y", "y`")
+        .withColumnRenamed("_fold", "`fold")
+    )
+    plain = logreg_train(feats, ["x1", "x2"], "y", 4, 4.0, chain_depth=1)
+    assert plain == logreg_train(
+        odd, ["x`1", "x2"], "y`", 4, 4.0, chain_depth=1
+    )
+    plain = logreg_train_folds(
+        feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0, chain_depth=1
+    )
+    assert plain == logreg_train_folds(
+        odd, ["x`1", "x2"], "y`", "`fold", 3, 4, 4.0, chain_depth=1
+    )

@@ -4,15 +4,36 @@ with checkpoint-based exactly-once, cross-batch dedup, windowed aggs."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from nashville_etl_service_backup_spark.streaming import commitlog
 from nashville_etl_service_backup_spark.streaming.pipeline import (
     incremental_etl,
     session_windows,
     windowed_counts,
 )
+
+# Every sink test runs twice: on a fresh commit-log store, and on a
+# store that is turned into the retired plain layout after its first
+# round and migrated with adopt_plain_layout before writing on.
+adopted = pytest.mark.parametrize("adopted", [False, True])
+
+
+def _plain_then_adopt(spark, *roots):
+    """Drop each store's ``_commits/`` log — leaving exactly the bare
+    ``batch_id=`` directories the old plain-layout writer produced —
+    check readers refuse it with the migration hint, then adopt it
+    (once: a second adoption writes no manifest)."""
+    for root in roots:
+        shutil.rmtree(os.path.join(root, "_commits"))
+        with pytest.raises(FileNotFoundError, match="adopt_plain_layout"):
+            commitlog.read_committed(spark, root)
+        assert commitlog.adopt_plain_layout(root) == 0
+        assert commitlog.adopt_plain_layout(root) is None
 
 
 def _write_raw(spark, path, rows, start_id=0):
@@ -161,19 +182,14 @@ def test_stateful_dedup_across_batches(spark, tmp_path):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("commit_log", [False, True])
-def test_incremental_rollup_equals_batch_recompute(
-    spark, tmp_path, commit_log
-):
-    """Both sink layouts (plain directory listing and the manifest
-    commit log — the r10 default-flip soak, VERDICT r8 Next #6) run
-    the same batch-parity + crash-replay + double-compaction
-    scenario."""
+@adopted
+def test_incremental_rollup_equals_batch_recompute(spark, tmp_path, adopted):
+    """Batch parity, crash replay and double compaction of the rollup,
+    on a fresh store and on a migrated plain-layout store."""
     from datetime import datetime
 
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         compact_rollup,
-        compact_rollup_committed,
         incremental_rollup,
         read_rollup,
     )
@@ -194,16 +210,8 @@ def test_incremental_rollup_equals_batch_recompute(
     def rollup_state():
         return {
             (str(r["window_start"]), r["event_type"]): (r["n"], float(r["total"]))
-            for r in read_rollup(
-                spark, roll, commit_log=commit_log
-            ).collect()
+            for r in read_rollup(spark, roll).collect()
         }
-
-    def compact():
-        if commit_log:
-            compact_rollup_committed(spark, roll)
-        else:
-            compact_rollup(spark, roll)
 
     b1 = [
         ("2024-01-01T10:05:00", "click", 1.5),
@@ -215,13 +223,11 @@ def test_incremental_rollup_equals_batch_recompute(
         ("2024-01-01T09:30:00", "view", 3.25),   # late: older window
     ]
     write(b1, [1, 2, 3])
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
+    if adopted:
+        _plain_then_adopt(spark, roll)
     write(b2, [4, 5])
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
 
     expected = {
         ("2024-01-01 10:00:00", "click"): (3, 4.0),
@@ -236,42 +242,24 @@ def test_incremental_rollup_equals_batch_recompute(
     # replayed batch overwrites its own batch_id=1 partial, so the
     # merged rollup must NOT double-count (the pre-fix
     # read-merge-overwrite design added batch 1's rows a second time;
-    # in commit-log mode the duplicate add is additionally a manifest
-    # no-op).
-    import os
-
+    # the duplicate add is additionally a manifest no-op).
     os.remove(os.path.join(ckpt, "commits", "1"))
     crc = os.path.join(ckpt, "commits", ".1.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
     assert rollup_state() == expected
 
     # compaction folds partials into one and preserves the result
-    compact()
+    compact_rollup(spark, roll)
     assert rollup_state() == expected
 
-    # re-compaction: the compacted partial is itself an input; the
-    # plain path stage-renames to free the final name, the committed
-    # path picks a never-used id — both leave exactly one LIVE partial
-    compact()
+    # re-compaction: the compacted partial is itself an input; it picks
+    # a never-used id and leaves exactly one LIVE partial
+    compact_rollup(spark, roll)
     assert rollup_state() == expected
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        assert commitlog.snapshot(roll) == ["batch_id=-2"]
-        entries = sorted(
-            e for e in os.listdir(roll) if e.startswith("batch_id=")
-        )
-        assert entries == ["batch_id=-2"]
-    else:
-        entries = sorted(
-            e for e in os.listdir(roll) if e.startswith("batch_id=")
-        )
-        assert entries == ["batch_id=-1"]
-    assert not os.path.exists(roll + "__compact")
+    assert commitlog.snapshot(roll) == ["batch_id=-2"]
+    assert commitlog.plain_dirs(roll) == ["batch_id=-2"]
 
 
 @pytest.mark.slow
@@ -363,11 +351,11 @@ def test_stream_stream_attribution_join(spark, tmp_path):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("commit_log", [False, True])
-def test_incremental_cms_matches_batch_sketch(spark, tmp_path, commit_log):
+@adopted
+def test_incremental_cms_matches_batch_sketch(spark, tmp_path, adopted):
     """Streaming CMS partials merged across batches == the sketch built
     over all events at once (counter monoid), and estimates never
-    undercount — in both sink layouts (r10 default-flip soak)."""
+    undercount."""
     from datetime import datetime
 
     from nashville_etl_service_backup_spark.operators.sketch import (
@@ -394,17 +382,15 @@ def test_incremental_cms_matches_batch_sketch(spark, tmp_path, commit_log):
 
     write([("2024-01-01T10:00:00", 1), ("2024-01-01T10:01:00", 1),
            ("2024-01-01T10:02:00", 2)], [1, 2, 3])
-    incremental_cms(
-        spark, src, cmsp, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_cms(spark, src, cmsp, ckpt).awaitTermination(120)
+    if adopted:
+        _plain_then_adopt(spark, cmsp)
     write([("2024-01-01T11:00:00", 1), ("2024-01-01T11:01:00", 3)], [4, 5])
-    incremental_cms(
-        spark, src, cmsp, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_cms(spark, src, cmsp, ckpt).awaitTermination(120)
 
     streamed = {
         (r["row_idx"], r["bucket"]): r["cnt"]
-        for r in read_cms(spark, cmsp, commit_log=commit_log).collect()
+        for r in read_cms(spark, cmsp).collect()
     }
     whole = {
         (r["row_idx"], r["bucket"]): r["cnt"]
@@ -415,19 +401,16 @@ def test_incremental_cms_matches_batch_sketch(spark, tmp_path, commit_log):
     keys = spark.createDataFrame([(1,), (2,), (3,)], "user_id long")
     est = {
         r["user_id"]: r["est_count"]
-        for r in cms_estimate(
-            read_cms(spark, cmsp, commit_log=commit_log), keys, "user_id"
-        ).collect()
+        for r in cms_estimate(read_cms(spark, cmsp), keys, "user_id").collect()
     }
     assert est[1] >= 3 and est[2] >= 1 and est[3] >= 1
 
 
-@pytest.mark.parametrize("commit_log", [False, True])
-def test_incremental_hll_matches_batch_sketch(spark, tmp_path, commit_log):
+@adopted
+def test_incremental_hll_matches_batch_sketch(spark, tmp_path, adopted):
     """Streaming HLL register partials max-merged across batches == the
     sketch built over all events at once (register monoid under max),
-    so the streamed estimate is exactly the batch estimate — in both
-    sink layouts (r10 default-flip soak)."""
+    so the streamed estimate is exactly the batch estimate."""
     from datetime import datetime
 
     from nashville_etl_service_backup_spark.operators.sketch import (
@@ -457,18 +440,16 @@ def test_incremental_hll_matches_batch_sketch(spark, tmp_path, commit_log):
          ("2024-01-01T10:02:00", "view", 2)],
         [1, 2, 3],
     )
-    incremental_hll(
-        spark, src, hllp, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_hll(spark, src, hllp, ckpt).awaitTermination(120)
+    if adopted:
+        _plain_then_adopt(spark, hllp)
     write(
         [("2024-01-01T11:00:00", "click", 2), ("2024-01-01T11:01:00", "view", 7)],
         [4, 5],
     )
-    incremental_hll(
-        spark, src, hllp, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_hll(spark, src, hllp, ckpt).awaitTermination(120)
 
-    streamed = read_hll(spark, hllp, commit_log=commit_log)
+    streamed = read_hll(spark, hllp)
     whole = hll_registers(
         spark.read.parquet(src), "user_id", ["event_type"]
     )
@@ -487,15 +468,13 @@ def test_incremental_hll_matches_batch_sketch(spark, tmp_path, commit_log):
     assert est == batch_est
 
 
-@pytest.mark.parametrize("commit_log", [False, True])
-def test_incremental_lsh_dedup_gate(spark, tmp_path, commit_log):
+@adopted
+def test_incremental_lsh_dedup_gate(spark, tmp_path, adopted):
     """Cross-batch near-dup gate: batch-2 docs colliding with stored
     band signatures are flagged and kept out of the store; replaying a
     batch (crash between sink write and checkpoint commit) re-derives
-    identical verdicts — in both sink layouts (r10 default-flip
-    soak)."""
-    import os
-
+    identical verdicts. On an adopted store the probe sees the
+    migrated signatures."""
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         incremental_lsh_dedup,
         read_dedup_audit,
@@ -512,9 +491,7 @@ def test_incremental_lsh_dedup_gate(spark, tmp_path, commit_log):
         ).write.mode("append").parquet(src)
 
     def run_gate():
-        q = incremental_lsh_dedup(
-            spark, src, sig, audit, ckpt, commit_log=commit_log
-        )
+        q = incremental_lsh_dedup(spark, src, sig, audit, ckpt)
         q.awaitTermination(120)
         # AvailableNow termination and checkpoint-lock deregistration
         # are not atomic: stop() blocks until the query is fully gone,
@@ -531,20 +508,17 @@ def test_incremental_lsh_dedup_gate(spark, tmp_path, commit_log):
     ]
     write(b1)
     run_gate()
+    if adopted:
+        _plain_then_adopt(spark, sig, audit)
     write(b2)
     run_gate()
 
     rows = {
         r["batch_id"]: (r["n_docs"], r["n_dup_candidates"])
-        for r in read_dedup_audit(
-            spark, audit, commit_log=commit_log
-        ).collect()
+        for r in read_dedup_audit(spark, audit).collect()
     }
     assert rows == {0: (2, 0), 1: (2, 1)}
-    stored = {
-        r["doc_id"]
-        for r in spark.read.option("basePath", sig).parquet(sig).collect()
-    }
+    stored = {r["doc_id"] for r in commitlog.read_committed(spark, sig).collect()}
     assert stored == {1, 2, 4}  # the near-dup (3) never enters the store
 
     # replay batch 1: drop its checkpoint commit so the restarted stream
@@ -556,24 +530,18 @@ def test_incremental_lsh_dedup_gate(spark, tmp_path, commit_log):
     run_gate()
     rows = {
         r["batch_id"]: (r["n_docs"], r["n_dup_candidates"])
-        for r in read_dedup_audit(
-            spark, audit, commit_log=commit_log
-        ).collect()
+        for r in read_dedup_audit(spark, audit).collect()
     }
     assert rows == {0: (2, 0), 1: (2, 1)}
-    stored = {
-        r["doc_id"]
-        for r in spark.read.option("basePath", sig).parquet(sig).collect()
-    }
+    stored = {r["doc_id"] for r in commitlog.read_committed(spark, sig).collect()}
     assert stored == {1, 2, 4}
 
 
-@pytest.mark.parametrize("commit_log", [False, True])
-def test_incremental_bloom_gate(spark, tmp_path, commit_log):
+@adopted
+def test_incremental_bloom_gate(spark, tmp_path, adopted):
     """Cross-batch Bloom novelty gate: a batch-2 key already in the
     store is flagged and adds no positions; novel keys append; the
-    store never exceeds m distinct positions — in both sink layouts
-    (r10 default-flip soak)."""
+    store never exceeds m distinct positions."""
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         incremental_bloom_gate,
         read_bloom_audit,
@@ -590,46 +558,41 @@ def test_incremental_bloom_gate(spark, tmp_path, commit_log):
         ).write.mode("append").parquet(src)
 
     def run_gate():
-        q = incremental_bloom_gate(
-            spark, src, bloom, audit, ckpt, commit_log=commit_log
-        )
+        q = incremental_bloom_gate(spark, src, bloom, audit, ckpt)
         q.awaitTermination(120)
         q.stop()
 
     write([(1, "a"), (2, "b")])
     run_gate()
+    if adopted:
+        _plain_then_adopt(spark, bloom, audit)
     write([(1, "a-again"), (3, "c")])  # key 1 repeats, key 3 novel
     run_gate()
 
     rows = {
         r["batch_id"]: (r["n_docs"], r["n_flagged"])
-        for r in read_bloom_audit(
-            spark, audit, commit_log=commit_log
-        ).collect()
+        for r in read_bloom_audit(spark, audit).collect()
     }
     assert rows == {0: (2, 0), 1: (2, 1)}
-    store = spark.read.option("basePath", bloom).parquet(bloom)
+    store = commitlog.read_committed(spark, bloom)
     assert store.select("pos").distinct().count() <= 4096
     # batch 1 appended only key 3's positions (≤ k = 4 new rows)
     b1 = store.filter(F.col("batch_id") == 1).count()
     assert 1 <= b1 <= 4
 
 
-@pytest.mark.parametrize("commit_log", [False, True])
+@adopted
 def test_forget_from_rollup_retracts_and_is_idempotent(
-    spark, tmp_path, commit_log
+    spark, tmp_path, adopted
 ):
     """GDPR retraction partial: tombstoned records' contribution is
     subtracted at read-merge time, a fully-erased cell vanishes,
     re-running never double-retracts, and compaction folds the
-    negative partial away physically — in BOTH sink layouts (the test
-    previously rode the package default, which round 10 flipped to the
-    manifest commit log)."""
+    negative partial away physically."""
     from datetime import datetime
 
     from nashville_etl_service_backup_spark.streaming.pipeline import (
         compact_rollup,
-        compact_rollup_committed,
         forget_from_rollup,
         incremental_rollup,
         read_rollup,
@@ -648,9 +611,9 @@ def test_forget_from_rollup_retracts_and_is_idempotent(
         [(i, datetime.fromisoformat(ts), et, v) for i, ts, et, v in rows],
         "event_id long, ts timestamp, event_type string, value double",
     ).coalesce(1).write.mode("append").parquet(src)
-    incremental_rollup(
-        spark, src, roll, ckpt, commit_log=commit_log
-    ).awaitTermination(120)
+    incremental_rollup(spark, src, roll, ckpt).awaitTermination(120)
+    if adopted:
+        _plain_then_adopt(spark, roll)
 
     def state():
         return {
@@ -658,16 +621,14 @@ def test_forget_from_rollup_retracts_and_is_idempotent(
                 r["n"],
                 float(r["total"]),
             )
-            for r in read_rollup(
-                spark, roll, commit_log=commit_log
-            ).collect()
+            for r in read_rollup(spark, roll).collect()
         }
 
     before = state()
     assert sum(n for n, _ in before.values()) == 4
 
     tomb = spark.createDataFrame([(2,), (3,)], ["event_id"])
-    forget_from_rollup(spark, src, roll, tomb, commit_log=commit_log)
+    forget_from_rollup(spark, src, roll, tomb)
     after = state()
     # event 2 retracted from the 10:00 click cell; event 3's cell gone
     assert sum(n for n, _ in after.values()) == 2
@@ -677,14 +638,11 @@ def test_forget_from_rollup_retracts_and_is_idempotent(
     assert abs(sum(t for _, t in after.values()) - 2.0) < 1e-9
 
     # idempotent: same campaign id overwrites the same partial
-    forget_from_rollup(spark, src, roll, tomb, commit_log=commit_log)
+    forget_from_rollup(spark, src, roll, tomb)
     assert state() == after
 
     # compaction folds the retraction physically; served view unchanged
-    if commit_log:
-        compact_rollup_committed(spark, roll)
-    else:
-        compact_rollup(spark, roll)
+    compact_rollup(spark, roll)
     assert state() == after
 
 
@@ -697,7 +655,6 @@ def test_streaming_lsh_gate_sf01_crash_replay(spark, tmp_path):
     (checkpoint commit dropped) re-derives identical audits, and (c)
     the signature store stays bounded: band rows only, never text, and
     only novel docs' rows accumulate."""
-    import os
     import time
 
     from nashville_etl_service_backup_spark.operators.dedup import (
@@ -760,7 +717,7 @@ def test_streaming_lsh_gate_sf01_crash_replay(spark, tmp_path):
 
     # store stays bounded: only (doc_id, band_idx, band_hash) rows for
     # novel docs — n_novel_docs × bands rows, no text column
-    stored = spark.read.option("basePath", sig).parquet(sig)
+    stored = commitlog.read_committed(spark, sig)
     n_novel = 5000 - sum(d for _, d in got.values())
     assert set(stored.columns) == {"doc_id", "band_idx", "band_hash", "batch_id"}
     assert stored.count() == n_novel * 2  # bands=2 rows per novel doc
@@ -778,10 +735,7 @@ def test_streaming_lsh_gate_sf01_crash_replay(spark, tmp_path):
         for r in read_dedup_audit(spark, audit).collect()
     }
     assert replay == want
-    assert (
-        spark.read.option("basePath", sig).parquet(sig).count()
-        == n_novel * 2
-    )
+    assert commitlog.read_committed(spark, sig).count() == n_novel * 2
     for rdf in rounds:
         rdf.unpersist()
     # wall-clock sanity: timing is machine-dependent, so the bound only
@@ -801,8 +755,6 @@ def test_incremental_ivf_matches_batch_and_survives_replay(spark, tmp_path):
     same frozen centroids, a crash-replayed batch cannot double-post,
     and a torn (uncommitted) partial is invisible to the
     commit-log reader."""
-    import os
-
     from nashville_etl_service_backup_spark.operators.similarity import (
         as_double,
         ivf_assign,
@@ -832,7 +784,7 @@ def test_incremental_ivf_matches_batch_and_survives_replay(spark, tmp_path):
     corpus.repartition(3).write.parquet(src)
 
     def run():
-        q = incremental_ivf(spark, src, idx, ckpt, cents, commit_log=True)
+        q = incremental_ivf(spark, src, idx, ckpt, cents)
         q.awaitTermination(300)
         q.stop()
 
@@ -841,7 +793,7 @@ def test_incremental_ivf_matches_batch_and_survives_replay(spark, tmp_path):
     # streamed index == batch rebuild with the same frozen quantizer
     streamed = {
         (r["vec_id"], r["cent_id"])
-        for r in read_ivf_index(spark, idx, commit_log=True)
+        for r in read_ivf_index(spark, idx)
         .select("vec_id", "cent_id")
         .collect()
     }
@@ -854,7 +806,7 @@ def test_incremental_ivf_matches_batch_and_survives_replay(spark, tmp_path):
     # served top-k == the batch ivf_topk with kmeans_iters=0 is NOT
     # comparable (different quantizer init) — compare against the
     # probe/re-rank over the batch-assigned store instead
-    index = read_ivf_index(spark, idx, commit_log=True)
+    index = read_ivf_index(spark, idx)
     got = ivf_probe_topk(index, cents, query, k=5, n_probe=2).collect()
     want_store = ivf_assign(base, cents, id_col="vec_id", dim=64).join(
         base, "vec_id"
@@ -870,7 +822,7 @@ def test_incremental_ivf_matches_batch_and_survives_replay(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{idx}/batch_id=777")
     still = {
         r["vec_id"]
-        for r in read_ivf_index(spark, idx, commit_log=True).collect()
+        for r in read_ivf_index(spark, idx).collect()
     }
     assert 999999 not in still
 
@@ -890,7 +842,7 @@ def test_incremental_ivf_matches_batch_and_survives_replay(spark, tmp_path):
     assert len(commitlog.log_entries(idx)) == n_manifests
     replayed = {
         (r["vec_id"], r["cent_id"])
-        for r in read_ivf_index(spark, idx, commit_log=True)
+        for r in read_ivf_index(spark, idx)
         .select("vec_id", "cent_id")
         .collect()
     }
@@ -946,12 +898,10 @@ def test_incremental_ivf_recall_vs_refit(spark, tmp_path):
         "append"
     ).parquet(src)
 
-    q = incremental_ivf(
-        spark, src, idx, ckpt, cents_frozen, commit_log=True
-    )
+    q = incremental_ivf(spark, src, idx, ckpt, cents_frozen)
     q.awaitTermination(300)
     q.stop()
-    index = read_ivf_index(spark, idx, commit_log=True)
+    index = read_ivf_index(spark, idx)
     frozen_ids = {
         r["vec_id"]
         for r in ivf_probe_topk(index, cents_frozen, query, k=10, n_probe=2)
